@@ -274,6 +274,10 @@ def spread_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
 #:    trio. The rest of the r11 window keeps its slots — every member's
 #:    freshest driver row is r11, far above the machine-checked >=r08
 #:    staleness bar, and rotation churn is itself a correctness risk.
+#: 4. sources/rest.py changed (``to_dataframe`` builds Arrow batches):
+#:    its canaries s4_keyset_increment and s7_detail_fanout are seated,
+#:    funded by releasing x_split_shard and x_string_agg, both r12-fresh
+#:    with bodies and libraries untouched.
 #: Names absent from this list keep registration order after it.
 _PRIORITY: list[str] = [
     # §2 spine
@@ -291,7 +295,7 @@ _PRIORITY: list[str] = [
     "x_minhash_lsh_candidates", "x_mixture_sample",
     "x_multimodal_meta", "x_semantic_decontaminate",
     "x_semdedup", "x_simhash", "x_simhash_pairs", "x_sparse_cosine_pairs",
-    "x_split_shard", "x_stratified_sample", "x_string_agg",
+    "x_stratified_sample",
     "x_token_budget_plan", "x_vocab_encode", "x_weighted_sample",
     "x_winnowing_fingerprints", "x_winnowing_pairs",
     # r11 new-query cohort (keeps slots)
@@ -300,6 +304,8 @@ _PRIORITY: list[str] = [
     # re-oracled graph-family rewrites (7): see header
     "x_bfs_trade", "x_sssp_trade", "x_kcore_trade", "x_pagerank_trade",
     "x_hits_trade", "x_ppr_trade", "x_triangle_trade",
+    # sources/rest.py canaries (see header)
+    "s4_keyset_increment", "s7_detail_fanout",
 ]
 
 

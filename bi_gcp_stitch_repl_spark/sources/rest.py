@@ -8,8 +8,14 @@ detail fan-out against six SaaS APIs; this module re-expresses them as:
   data-bound: page counts are 10²-10⁴, so the driver loop is not the
   bottleneck — the *fetch latency* is, which the reference also serialized
   per page);
-- ``to_dataframe``: pages → ``spark.createDataFrame`` with an explicit
-  schema (autodetect only as dev fallback, SURVEY §1.3);
+- ``to_dataframe``: pages → Arrow record batches against an explicit
+  schema (autodetect only as dev fallback, SURVEY §1.3), each row checked
+  by PySpark's own type verifier, then one ``spark.createDataFrame`` call
+  on the whole ``pyarrow.Table``. No per-chunk frames and no union fold:
+  the extract is a JVM-resident Arrow relation that every later action
+  re-reads without a Python worker pass. Driver-side Python dicts stay
+  bounded to one ``chunk_rows`` chunk. It is the sources layer's one
+  driver-rows → DataFrame path (``sheets`` uses it too);
 - ``fanout_fetch``: the per-key detail fetch (S7/J6) as ``mapInPandas``
   over the key DataFrame — Spark's distributed replacement for the
   reference's ThreadPoolExecutor (MAX_WORKERS 2-10,
@@ -36,7 +42,7 @@ Protocols (reference sites):
 from __future__ import annotations
 
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -302,50 +308,89 @@ def paginate_starting_after(
 
 def to_dataframe(
     spark: SparkSession,
-    pages: Iterator[list[dict]],
+    pages: Iterable[list],
     schema,
     chunk_rows: int = 50_000,
 ) -> DataFrame:
     """Materialize a page iterator into a DataFrame with an explicit schema.
 
     The reference pickles whole pandas frames through Airflow XCom between
-    tasks (SURVEY §3.1 stage 3); here pages are shipped to the JVM in
-    ``chunk_rows`` slices as they arrive, so driver residency is bounded
-    by one chunk of Python dicts — not the whole extract (the API-side
-    pagination is inherently driver-sequential; holding 5M dicts for a
-    large pull was the old cost). The list-of-dicts conversion is kept
-    per chunk because it is the one path that handles the nested
-    struct/array payloads (vouchers, invoices) robustly; rows missing
-    keys get NULL (the reference's required_columns padding) — explicit
-    schema = schema-on-write (SURVEY §1.3)."""
-    chunks: list[DataFrame] = []
-    buf: list[dict] = []
+    tasks (SURVEY §3.1 stage 3). Here pages are converted to Arrow record
+    batches in ``chunk_rows`` slices as they arrive, so the driver holds
+    Python dicts for one chunk at a time; the whole extract stays on the
+    driver only as compact Arrow buffers, then as the JVM's local
+    collection. All batches are handed to ``spark.createDataFrame`` once,
+    as one ``pyarrow.Table``: the frame is a JVM-resident Arrow relation,
+    so every later action re-reads it without a Python worker pass, and
+    there is no per-chunk frame to union.
+
+    Schema-on-write (SURVEY §1.3) is the ``createDataFrame(rows, schema)``
+    contract, kept row for row: each row passes PySpark's own type
+    verifier (Arrow alone would accept an int in a ``double`` field and
+    ``1.0`` in a ``bigint`` one), then PySpark's own conversion to internal
+    values, which fills missing keys with NULL at every nesting level (the
+    reference's required_columns padding) and turns naive datetimes into
+    epoch micros in process-local time, as ``TimestampType.toInternal``
+    does. One difference remains: a ``Decimal`` with more scale than its
+    field declares raises here, where ``createDataFrame(rows)`` rounds
+    it (JSON payloads carry no ``Decimal``, and no extract schema
+    declares one). Rows are dicts or positional tuples; ``schema`` is a
+    ``StructType`` or a DDL string; an extract with no rows is an empty
+    frame with that schema.
+
+    Partitioning: below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MiB of Arrow data by default) the frame is a local relation that
+    Spark splits into ``defaultParallelism`` even partitions for the whole
+    extract, where the old per-chunk frames had that many per chunk.
+    Above it, each Arrow batch is one partition, so each chunk is cut into
+    ``defaultParallelism`` even batches, the split ``parallelize`` gives,
+    or into just enough even batches to stay under
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, because
+    ``createDataFrame`` would otherwise re-cut each oversized batch into
+    uneven partitions."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    verify = _make_type_verifier(schema)
+    slices = spark.sparkContext.defaultParallelism
+    max_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    batches: list[pa.RecordBatch] = []
+    buf: list = []
 
     def flush() -> None:
-        nonlocal buf
-        if not buf:
-            return
-        chunks.append(spark.createDataFrame(buf, schema=schema))
-        buf = []
+        rows = []
+        for row in buf:
+            verify(row)
+            rows.append(schema.toInternal(row))
+        buf.clear()
+        n = len(rows)
+        k = min(n, slices)
+        if max_batch > 0:
+            k = max(k, -(-n // max_batch))
+        for i in range(k):
+            cols = zip(*rows[i * n // k : (i + 1) * n // k])
+            batches.append(
+                pa.RecordBatch.from_arrays(
+                    [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+                    schema=arrow_schema,
+                )
+            )
 
     for page in pages:
         buf.extend(page)
         if len(buf) >= chunk_rows:
             flush()
     flush()
-    if not chunks:
-        return spark.createDataFrame([], schema=schema)
-    # balanced union tree, not a left-leaning chain: a large backfill's
-    # thousands of chunks would otherwise build an O(n)-deep Union plan
-    # (quadratic analysis time, driver StackOverflow risk) — pairwise
-    # folding keeps depth at log2(n)
-    while len(chunks) > 1:
-        nxt = []
-        for i in range(0, len(chunks), 2):
-            pair = chunks[i : i + 2]
-            nxt.append(pair[0] if len(pair) == 1 else pair[0].unionByName(pair[1]))
-        chunks = nxt
-    return chunks[0]
+    if not batches:
+        # a zero-chunk column breaks createDataFrame for nested types
+        batches.append(pa.RecordBatch.from_pylist([], schema=arrow_schema))
+    table = pa.Table.from_batches(batches, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
 
 
 # ---------------------------------------------------------------------------

@@ -8,14 +8,18 @@ cols 0:7 + drop-empty-column ``dags/price-increase/import_bi_dev_gross_margin.py
 35-46``).
 
 Sheets are driver-sized by nature (≤ a few 10⁵ cells), so the fetch is
-driver-side; everything after ``createDataFrame`` is distributed. The sheet
-client is injectable — the engine takes the values matrix, not a live API.
+driver-side; the rows enter Spark through ``rest.to_dataframe``, the one
+driver-rows → DataFrame path of the sources layer, and everything after it
+is distributed. The sheet client is injectable — the engine takes the
+values matrix, not a live API.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .rest import to_dataframe
 
 
 def fetch_sheet_values(
@@ -129,4 +133,4 @@ def sheet_to_dataframe(
     schema = T.StructType(
         [T.StructField(n, T.StringType()) for n in out_names]
     )
-    return spark.createDataFrame(data, schema=schema)
+    return to_dataframe(spark, [data], schema)

@@ -160,6 +160,27 @@ def test_mixture_sample_decisions_are_uncorrelated_across_adjacent_keys(spark):
     assert adjacent < 250, adjacent
 
 
+def test_dsir_fit_totals_past_bigint_take_distributed_path():
+    """The driver fit answers only where the distributed spelling's BIGINT
+    ``total + DSIR_BUCKETS`` holds: a raw or target total whose sum with
+    ``DSIR_BUCKETS`` reaches 2^63 returns None (the fallback), even when
+    every product and quotient would still fit."""
+    from collections import namedtuple
+
+    from bi_gcp_stitch_repl_spark.queries.curation import (
+        DSIR_BUCKETS,
+        _dsir_q9_rows,
+    )
+
+    B = namedtuple("B", "bucket cr ct")
+    edge = 2**63 - DSIR_BUCKETS
+    assert [b for b, _ in _dsir_q9_rows([B(0, 5, 2), B(7, 3, 1)])] == [0, 7]
+    assert _dsir_q9_rows([B(0, 2**62, 1), B(1, edge - 2**62 - 1, 1)]) is not None
+    assert _dsir_q9_rows([B(0, 2**62, 1), B(1, edge - 2**62, 1)]) is None
+    assert _dsir_q9_rows([B(0, 1, 2**62), B(1, 1, edge - 2**62)]) is None
+    assert _dsir_q9_rows([B(0, 2**62, 1), B(1, 2**62, 1)]) is None
+
+
 def test_dsir_weights_rank_target_slice_higher(spark):
     """The DSIR signal's semantic claim (not just oracle parity): on the
     real corpus, the target slice (lang='en') must average a HIGHER mean

@@ -126,8 +126,8 @@ def test_driver_window_covers_survey_gates():
         "x_minhash_lsh_candidates", "x_mixture_sample",
         "x_multimodal_meta", "x_semantic_decontaminate",
         "x_semdedup", "x_simhash", "x_simhash_pairs",
-        "x_sparse_cosine_pairs", "x_split_shard", "x_stratified_sample",
-        "x_string_agg", "x_token_budget_plan", "x_vocab_encode",
+        "x_sparse_cosine_pairs", "x_stratified_sample",
+        "x_token_budget_plan", "x_vocab_encode",
         "x_weighted_sample", "x_winnowing_fingerprints",
         "x_winnowing_pairs",
         # r11 new-query cohort (keeps slots)
@@ -137,6 +137,9 @@ def test_driver_window_covers_survey_gates():
         "x_bfs_trade", "x_sssp_trade", "x_kcore_trade",
         "x_pagerank_trade", "x_hits_trade", "x_ppr_trade",
         "x_triangle_trade",
+        # sources/rest.py canaries, seated in place of x_split_shard and
+        # x_string_agg (both r12-fresh, untouched)
+        "s4_keyset_increment", "s7_detail_fanout",
     }
     assert len(required) == 50
     missing = required - set(first50)

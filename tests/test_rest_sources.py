@@ -177,6 +177,211 @@ def test_to_dataframe_schema_padding(spark):
     assert rows[1]["missing"] is None and rows[2]["name"] == "b"
 
 
+def _random_value(rng, dt, nullable=True):
+    """A payload value for ``dt``: NULL where the schema allows it, or a
+    value of the declared type with structs missing keys, empty arrays
+    and maps."""
+    import datetime
+
+    if nullable and rng.random() < 0.15:
+        return None
+    if isinstance(dt, T.StructType):
+        return {
+            f.name: _random_value(rng, f.dataType, f.nullable)
+            for f in dt.fields
+            if not f.nullable or rng.random() < 0.7
+        }
+    if isinstance(dt, T.ArrayType):
+        return [_random_value(rng, dt.elementType, dt.containsNull) for _ in range(rng.randrange(3))]
+    if isinstance(dt, T.MapType):
+        return {
+            f"k{i}": _random_value(rng, dt.valueType, dt.valueContainsNull)
+            for i in range(rng.randrange(3))
+        }
+    if isinstance(dt, T.BooleanType):
+        return rng.random() < 0.5
+    if isinstance(dt, (T.LongType, T.IntegerType)):
+        return rng.randrange(-(2**31), 2**31)
+    if isinstance(dt, T.DoubleType):
+        return rng.uniform(-1e6, 1e6)
+    if isinstance(dt, T.StringType):
+        return rng.choice(["", "a", "Zürich", "x" * 40, "line\nbreak"])
+    if isinstance(dt, T.TimestampType):
+        return datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=rng.randrange(10**8))
+    if isinstance(dt, T.DateType):
+        return datetime.date(2024, 1, 1) + datetime.timedelta(days=rng.randrange(1000))
+    raise AssertionError(f"no generator for {dt}")
+
+
+def _extract_schemas():
+    """Every source and detail schema the entity manifest declares, plus
+    the ``schemas.*`` extract schemas."""
+    from bi_gcp_stitch_repl_spark import schemas
+    from bi_gcp_stitch_repl_spark.jobs.entities import ENTITY_MANIFEST
+
+    out = {}
+    for name, spec in ENTITY_MANIFEST.items():
+        for part in ("source", "detail"):
+            ddl = (spec.params.get(part) or {}).get("schema")
+            if ddl is not None:
+                out.setdefault(ddl, f"{name}.{part}")
+    for name in dir(schemas):
+        if isinstance(getattr(schemas, name), T.StructType):
+            out[getattr(schemas, name)] = f"schemas.{name}"
+    return out
+
+
+def test_to_dataframe_matches_create_dataframe_on_every_extract_schema(spark):
+    """Generated payloads — nested structs missing keys, empty and NULL
+    arrays and maps, rows missing every key — collect equal through the
+    Arrow path and through ``createDataFrame(rows, schema)``, for every
+    schema an extract declares. Small chunks exercise the chunk and
+    partition split."""
+    import random
+
+    rng = random.Random(20241017)
+    schemas = _extract_schemas()
+    assert len(schemas) > 20
+    for schema, where in schemas.items():
+        st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+        rows = [_random_value(rng, st, nullable=False) for _ in range(40)]
+        if all(f.nullable for f in st.fields):
+            rows.append({})
+        pages = [rows[i : i + 6] for i in range(0, len(rows), 6)]
+        got = rest.to_dataframe(spark, iter(pages), schema, chunk_rows=13)
+        want = spark.createDataFrame(rows, schema=st)
+        assert got.schema == want.schema, where
+        assert got.collect() == want.collect(), where
+
+
+@pytest.mark.parametrize(
+    "row, ddl",
+    [
+        ({"Id": 1, "amount": 3}, "Id long, amount double"),
+        ({"Id": True}, "Id long"),
+        ({"Id": 1.0}, "Id long"),
+        ({"Id": "1"}, "Id long"),
+    ],
+)
+def test_to_dataframe_rejects_what_create_dataframe_rejects(spark, row, ddl):
+    """Schema-on-write stays strict: Arrow alone would take an int in a
+    double field and 1.0 in a bigint one; the row verifier does not."""
+    from pyspark.errors import PySparkTypeError
+
+    with pytest.raises(PySparkTypeError):
+        spark.createDataFrame([row], schema=ddl)
+    with pytest.raises(PySparkTypeError):
+        rest.to_dataframe(spark, iter([[row]]), ddl)
+
+
+def test_to_dataframe_empty_pages_keep_schema(spark):
+    """No rows gives an empty frame with the declared schema, for a flat
+    schema and for every extract schema, whose structs, arrays of structs
+    and maps Arrow handles apart from flat columns."""
+    ddl = "Id long, amount double, status string"
+    df = rest.to_dataframe(spark, iter([]), ddl)
+    assert df.schema == T.StructType.fromDDL(ddl)
+    assert df.collect() == []
+    assert rest.to_dataframe(spark, iter([[], []]), ddl).count() == 0
+    for schema, where in _extract_schemas().items():
+        st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+        df = rest.to_dataframe(spark, iter([[]]), schema)
+        assert df.schema == st, where
+        assert df.collect() == [], where
+
+
+def test_to_dataframe_batches_stay_under_arrow_batch_limit(spark):
+    """Above ``localRelationThreshold`` the frame keeps one partition per
+    Arrow batch. A chunk whose even ``defaultParallelism`` split would
+    exceed ``maxRecordsPerBatch`` is cut into just enough even batches,
+    so ``createDataFrame`` does not re-cut them into uneven partitions."""
+    from pyspark.sql import functions as F
+
+    confs = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "5",
+        "spark.sql.execution.arrow.localRelationThreshold": "0",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        n = 5 * (spark.sparkContext.defaultParallelism + 2) + 2
+        rows = [{"id": i} for i in range(n)]
+        df = rest.to_dataframe(spark, iter([rows]), "id long")
+        sizes = [
+            r["n"]
+            for r in df.groupBy(F.spark_partition_id().alias("p"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        ]
+        assert df.rdd.getNumPartitions() == len(sizes) == -(-n // 5)
+        assert max(sizes) == 5 and min(sizes) == 4
+        assert sorted(r["id"] for r in df.collect()) == list(range(n))
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_to_dataframe_naive_timestamps_in_local_time(spark):
+    """Under a non-UTC process zone a naive datetime means local wall
+    time, as ``TimestampType.toInternal`` reads it: the epoch and the
+    collected value equal ``createDataFrame``'s, at top level and nested.
+    A plain Arrow conversion would read it as UTC, one hour off here."""
+    import datetime
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    schema = T.StructType.fromDDL(
+        "ts timestamp, d date, s struct<ts: timestamp>, a array<timestamp>"
+    )
+    naive = datetime.datetime(2024, 1, 1, 12, 0)
+    aware = datetime.datetime(2024, 7, 1, 12, 0, tzinfo=datetime.timezone.utc)
+    rows = [
+        {"ts": naive, "d": datetime.date(2024, 1, 2), "s": {"ts": naive}, "a": [naive, aware]},
+        {"ts": aware},
+    ]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Europe/Berlin"
+    time.tzset()
+    try:
+        got = rest.to_dataframe(spark, iter([rows]), schema)
+        want = spark.createDataFrame(rows, schema=schema)
+        collected = got.collect()
+        assert collected == want.collect()
+        assert collected[0]["ts"] == naive
+        epoch = F.col("ts").cast("long")
+        assert got.select(epoch).collect() == want.select(epoch).collect()
+        assert got.select(epoch).first()[0] == 1704106800  # 11:00 UTC
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+
+
+def _runs_python_per_action(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_driver_rows_lineage_has_no_python_rdd(spark):
+    """Lineage sentinel: a frame built from driver rows is a JVM-resident
+    Arrow relation, so an action on it runs no Python worker pass. A
+    ``createDataFrame(list)`` frame re-pickles every row through a
+    ``PythonRDD`` on every action."""
+    from bi_gcp_stitch_repl_spark.sources.sheets import sheet_to_dataframe
+
+    pages = iter([[{"id": 1, "name": "a"}], [{"id": 2}]])
+    assert not _runs_python_per_action(
+        rest.to_dataframe(spark, pages, "id long, name string")
+    )
+    sheet = sheet_to_dataframe(spark, [["name", "city"], ["a", "Bern"], ["b"]])
+    assert not _runs_python_per_action(sheet)
+    assert _runs_python_per_action(spark.createDataFrame([(1,)], "id long"))
+
+
 def test_fanout_fetch_parallel_with_failures(spark):
     keys = spark.createDataFrame([(i,) for i in range(1, 21)], "id long")
     schema = T.StructType(
